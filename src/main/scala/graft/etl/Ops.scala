@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
 
 /** The reference's relational operators as composable
   * `DataFrame => DataFrame` functions (SURVEY.md §2.3-§2.10).
@@ -14,6 +15,11 @@ import org.apache.spark.sql.functions._
   *    reference's window + `max` (one shuffle/sort less); the reference
   *    shape is kept behind [[assembleRecommendationsWindowed]] for
   *    differential testing;
+  *  - the EXCEPT delta check lists atomic columns before nested ones:
+  *    Spark plans EXCEPT as a null-safe left-anti sort-merge join whose
+  *    keys follow column order, so keys compare before the
+  *    `array<struct>` payloads, which then compare only for rows that
+  *    agree on every atomic column;
   *  - the delta check offers a keyed `xxhash64` variant that avoids
   *    shuffling whole `array<struct>` payloads.
   */
@@ -140,9 +146,33 @@ object Ops {
     * (reference `related_items_etl.py:262-266`). Note EXCEPT also
     * de-duplicates the current side; that is observable reference
     * behaviour and preserved (SURVEY.md §7.4#3).
+    *
+    * The EXCEPT itself runs over the canonical columns reordered atomic
+    * first, nested (array/struct/map) last, and the sorted order is
+    * restored after it. Spark rewrites EXCEPT into a left-anti sort-merge
+    * join on every column plus a distinct, sorting by the columns in
+    * order; in sorted order a `recommendations` array falls between the
+    * two keys of a related-items row, so every comparison of two rows of
+    * the same item compared (and first float-normalized) whole arrays.
+    * Atomic-first compares arrays only for rows equal on every atomic
+    * column. Rows and columns out are exactly those of the plain
+    * `canonicalizeColumns(current).except(canonicalizeColumns(state))`
+    * (differential spec in OpsSpec); both sides are paired by position
+    * as before.
     */
-  def deltaCheck(current: DataFrame, state: DataFrame): DataFrame =
-    canonicalizeColumns(current).except(canonicalizeColumns(state))
+  def deltaCheck(current: DataFrame, state: DataFrame): DataFrame = {
+    val cur = canonicalizeColumns(current)
+    val st = canonicalizeColumns(state)
+    val atomicFirst = cur.schema.fields.indices.sortBy(i =>
+      cur.schema(i).dataType match {
+        case _: ArrayType | _: StructType | _: MapType => 1
+        case _ => 0
+      })
+    def reorder(df: DataFrame) =
+      df.select(atomicFirst.map(i => col(df.columns(i))): _*)
+    reorder(cur).except(reorder(st))
+      .select(cur.columns.map(col).toIndexedSeq: _*)
+  }
 
   /** A4 at 100 TB (SURVEY.md §4.3#3): keyed variant — compare a 64-bit
     * payload hash per key instead of shuffling whole `array<struct>` rows
@@ -230,7 +260,6 @@ object Ops {
   def pivotAttributesPerRecord(df: DataFrame, userIdCol: String,
       recFields: Seq[String],
       defaultPrefix: String = "recommendation_"): DataFrame = {
-    import org.apache.spark.sql.types.StructType
     val sdType: Option[StructType] = df.schema.fields
       .find(_.name == "syncDirectives")
       .map(_.dataType).collect { case s: StructType => s }

@@ -4,7 +4,8 @@ import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.functions.{col, count, lit, struct, transform,
+  when}
 import org.apache.spark.storage.StorageLevel
 
 import graft.config.JobConfig
@@ -32,9 +33,12 @@ final case class JobResult(jobName: String, runDateTime: String,
   * not replicated (SURVEY.md §2.13): paths derive from the job's own type
   * (#1), the decorate routine is shared so the wrong-window-key bug can't
   * recur (#2), `performDeltaCheck` accepts both scopes (#3), and state IS
-  * written back after a sync (#4). The exploded frame is persisted across
-  * the connector loop and decorate+assemble is memoized per metadata
-  * field list, so N connectors cost ONE scan of the batch input (#5).
+  * written back after a sync (#4). Decorate+assemble runs ONCE per job,
+  * with the union of the connectors' metadata field lists, and is
+  * persisted across the connector loop; a connector that asks for fewer
+  * or reordered fields reads a projection of that one frame, so N
+  * connectors cost ONE scan of the batch input and ONE decorate join and
+  * grouping (#5).
   */
 object Jobs {
 
@@ -84,7 +88,7 @@ object Jobs {
 
     // Error count piggybacks on the first connector write: the observe
     // node sits BELOW the split's filters, so the action that
-    // materializes the persisted exploded frame flows every raw row
+    // materializes the persisted assembled frame flows every raw row
     // through it and counts non-null `error`s for free. The errors sink
     // then gates on that driver-side count — a clean run never scans the
     // input again just to prove there were no errors (the old `isEmpty`
@@ -120,20 +124,20 @@ object Jobs {
       s"$jobRoot/input/item_metadata")
 
     val outputRoot = s"$jobRoot/output"
-    // Shared upstream: every connector consumes the same exploded frame,
-    // and connectors that request the same metadata field list share one
-    // decorate+assemble subtree — N connectors cost ONE scan of the batch
-    // input, not N (the reference re-runs the whole Glue dataflow per
-    // connector).
-    val persistedExploded = exploded.persist(StorageLevel.MEMORY_AND_DISK)
-    val assembledByFields =
-      scala.collection.mutable.Map.empty[Seq[String], DataFrame]
-    def assembledFor(fields: Seq[String]): DataFrame =
-      assembledByFields.getOrElseUpdate(fields, {
-        val decorated = Ops.decorate(persistedExploded, metadata, fields)
-        Ops.assembleRecommendations(decorated, spec.groupKeys)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      })
+    // Shared upstream: ONE decorate+assemble with the union of the
+    // connectors' field lists (widest list first, so a connector that
+    // wants every field reads the frame as is), persisted across the
+    // loop. Every other field list is a projection of its arrays — N
+    // connectors cost one scan of the batch input, one decorate join and
+    // one grouping, not N (the reference re-runs the whole Glue dataflow
+    // per connector). Without metadata every recItem is just {itemId}.
+    val connectors = config.connectors.toSeq.sortBy(_._1).map {
+      case (connector, cc) => (connector, cc, metadata.fold(Seq.empty[String])(
+        meta => if (cc.itemMetadataFields.nonEmpty) cc.itemMetadataFields
+                else meta.columns.filter(_ != "id").toSeq))
+    }
+    val unionFields = connectors.map(_._3).sortBy(-_.size).flatten.distinct
+    var persisted = Option.empty[DataFrame]
     // Error diagnostics must survive a mid-loop connector failure (the
     // reference writes errors BEFORE any connector send,
     // `related_items_etl.py:114-132`): the write fires as soon as the
@@ -154,9 +158,16 @@ object Jobs {
         errorsWritten = true
       }
     try {
-      val results = config.connectors.toSeq.sortBy(_._1).map {
-        case (connector, cc) =>
-          val assembled = assembledFor(cc.itemMetadataFields)
+      // Built inside the try: a field the metadata lacks fails analysis
+      // here, and that failure too must leave the error records behind.
+      val shared = Ops.assembleRecommendations(
+        Ops.decorate(exploded, metadata, unionFields), spec.groupKeys)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      persisted = Some(shared)
+      val results = connectors.map {
+        case (connector, cc, fields) =>
+          val assembled =
+            if (fields == unionFields) shared else projectRecs(shared, fields)
           val keyed = config.stateFormat == "keyed"
           val stateDir =
             if (keyed) s"$outputRoot/$connector/state_keyed"
@@ -202,9 +213,13 @@ object Jobs {
 
           // The first connector write has completed, so the observed
           // error count is available — persist errors NOW, before any
-          // further connector/state write gets a chance to fail.
+          // further connector/state write gets a chance to fail. The
+          // count can be missing: when AQE proves the write's input empty
+          // (an unchanged rerun's delta) it replaces the plan holding the
+          // observe node, and the probe-gated write takes over.
           writeErrors(
-            if (observeErrors) Some(errObs.get("errors").asInstanceOf[Long])
+            if (observeErrors)
+              errObs.get.get("errors").map(_.asInstanceOf[Long])
             else None)
 
           if (config.writeStateAfterSync) {
@@ -240,9 +255,19 @@ object Jobs {
         try writeErrors(None)
         catch { case e2: Throwable => e.addSuppressed(e2) }
         throw e
-    } finally {
-      assembledByFields.values.foreach(_.unpersist())
-      persistedExploded.unpersist()
-    }
+    } finally persisted.foreach(_.unpersist())
   }
+
+  /** Narrow each recommendation struct to `itemId` plus `fields`, in that
+    * order — the struct [[Ops.decorate]] builds for that field list. The
+    * element stays nullable, as [[Ops.assembleRecommendations]] makes it,
+    * so the schema (and the snapshot state read back through it) is the
+    * one a decorate+assemble with `fields` alone would produce.
+    */
+  private def projectRecs(assembled: DataFrame, fields: Seq[String])
+      : DataFrame =
+    assembled.withColumn("recommendations",
+      transform(col("recommendations"), r =>
+        when(r.isNull, lit(null)).otherwise(struct(
+          ("itemId" +: fields).map(f => r.getField(f).as(f)): _*))))
 }

@@ -1,11 +1,20 @@
 package graft
 
 import java.time.LocalDateTime
+import java.util.concurrent.atomic.AtomicLong
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerTaskEnd}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.config.JobConfig
+import graft.etl.Ops
+import graft.io.Readers
 import graft.jobs.Jobs
+import graft.schema.Schemas
 
 /** Golden end-to-end test of the full job dataflow: read -> split ->
   * map -> explode -> decorate -> assemble -> [delta] -> stamp -> write
@@ -78,8 +87,8 @@ class JobsSpec extends SparkSpec {
         "rec_", "US")))
   }
 
-  test("delta check across runs: second unchanged run emits zero rows") {
-    val root = tmpDir("jobdelta")
+  private def unchangedRerun(tag: String): Unit = {
+    val root = tmpDir(tag)
     writeFixtures(root)
     val cfg = config(root, delta = true)
     val r1 = Jobs.run(spark, Jobs.RelatedItems, root, "j",
@@ -88,8 +97,27 @@ class JobsSpec extends SparkSpec {
     val r2 = Jobs.run(spark, Jobs.RelatedItems, root, "j",
       cfg, LocalDateTime.of(2024, 1, 2, 0, 0, 0))
     assert(r2.connectors.head.rowsWritten == 0) // nothing changed
+    // The rerun still records the batch's one error line.
+    assert(r2.errorsDir.exists(_.endsWith("day=02/time=000000")))
+    assert(spark.read.json(r2.errorsDir.get).count() == 1)
     // State still holds the full snapshot after the empty delta run.
     assert(spark.read.json(s"$root/output/braze/state").count() == 4)
+  }
+
+  test("delta check across runs: second unchanged run emits zero rows") {
+    unchangedRerun("jobdelta")
+  }
+
+  test("unchanged rerun without broadcast joins: empty delta, errors kept") {
+    // Broadcast off, the EXCEPT against state sort-merges, AQE proves the
+    // rerun's delta empty and the error-count observation never arrives;
+    // the run must fall back to the probe-gated errors write instead of
+    // failing on the missing count.
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try unchangedRerun("jobdeltanobc")
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("keyed state format: O(delta) syncs with upserts and tombstones") {
@@ -158,18 +186,14 @@ class JobsSpec extends SparkSpec {
     assert(st.where(col("queryItemId") === "i3").count() == 0)
   }
 
-  /** Total external+cached records read by tasks while `body` runs; polls
+  /** What `listener` tallies into its counter while `body` runs; polls
     * the async listener bus until the counter goes quiet.
     */
-  private def recordsReadDuring(body: => Unit): Long = {
-    val acc = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null)
-          acc.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
-    }
-    spark.sparkContext.addSparkListener(listener)
+  private def tallyDuring(listener: AtomicLong => SparkListener)(
+      body: => Unit): Long = {
+    val acc = new AtomicLong
+    val l = listener(acc)
+    spark.sparkContext.addSparkListener(l)
     try {
       body
       var prev = -1L
@@ -180,8 +204,23 @@ class JobsSpec extends SparkSpec {
         if (cur == prev) stable += 1 else { stable = 0; prev = cur }
       }
       acc.get
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally spark.sparkContext.removeSparkListener(l)
   }
+
+  /** Total external+cached records read by tasks while `body` runs. */
+  private def recordsReadDuring(body: => Unit): Long =
+    tallyDuring(acc => new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          acc.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+    })(body)
+
+  /** Spark jobs started while `body` runs. */
+  private def jobsDuring(body: => Unit): Long =
+    tallyDuring(acc => new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        acc.incrementAndGet()
+    })(body)
 
   test("connector loop shares ONE scan of the batch input across connectors") {
     // Sizeable input so a per-connector re-scan would be visible in the
@@ -215,6 +254,101 @@ class JobsSpec extends SparkSpec {
     // input and rebuild the chain — which would roughly double the reads.
     assert(rr2 < (rr1 * 1.6).toLong,
       s"two-connector run read $rr2 records vs $rr1 for one connector")
+  }
+
+  test("connectors with different field lists share ONE decorate+assemble") {
+    // Three field lists — a subset, the same fields reordered, and all
+    // (empty list) — over two snapshot syncs; in the second, i2's recs
+    // change. Each connector's output and state must be byte for byte
+    // what a decorate+assemble with its OWN list builds, struct field
+    // order included.
+    val fieldLists = Map("a" -> Seq("brand"),
+      "b" -> Seq("price", "brand"), "c" -> Seq.empty[String])
+    def cfgFor(root: String, lists: Map[String, Seq[String]]) =
+      JobConfig.parse(s"""{"batchInferencePath": "$root/input/batch",
+        |"performDeltaCheck": true,
+        |"connectors": {${lists.map { case (c, fs) =>
+          s""""$c": {"itemMetadataFields": [${
+            fs.map(f => s""""$f"""").mkString(",")}]}"""
+        }.mkString(",")}}}""".stripMargin)
+    def fixture(tag: String): String = {
+      val root = tmpDir(tag)
+      writeFixtures(root)
+      Seq("""{"id":"p1","brand":"B1","price":"9.99"}""",
+        """{"id":"p9","price":"1.50"}""").toDF("value")
+        .coalesce(1).write.mode("overwrite")
+        .text(s"$root/input/item_metadata")
+      root
+    }
+    def changeI2(root: String): Unit =
+      Seq(
+        """{"input":{"itemId":"i1"},"output":{"recommendedItems":["p1","p2"]}}""",
+        """{"input":{"itemId":"i2"},"output":{"recommendedItems":["p9","p1"]}}""",
+        """{"input":{"itemId":"i3"},"output":{"recommendedItems":null}}""",
+        """{"input":{"itemId":"i4"},"error":"SIMULATED"}"""
+      ).toDF("value").coalesce(1).write.mode("overwrite")
+        .text(s"$root/input/batch")
+    // The per-connector chain: decorate and assemble with one list alone.
+    def reference(root: String, fields: Seq[String]): DataFrame = {
+      val (ok, _) = Ops.splitErrors(Readers.jsonl(spark,
+        s"$root/input/batch", Schemas.relatedItemsBatchInference))
+      val mapping = Readers.csv(spark, s"$root/input/user_item_mapping",
+        Schemas.userItemMapping)
+      val exploded = Ops.explodeRecs(Ops.mapUsers(ok, mapping),
+        "input.itemId", "queryItemId", Seq("USER_ID" -> "userId"))
+      val built = Ops.assembleRecommendations(Ops.decorate(exploded,
+        Readers.jsonlInferIfExists(spark, s"$root/input/item_metadata"),
+        fields), Jobs.RelatedItems.groupKeys)
+      // detached from the input files, which the next sync overwrites
+      spark.createDataFrame(built.collect().toSeq.asJava, built.schema)
+    }
+    def lines(df: DataFrame): Seq[String] = df.toJSON.collect().toSeq.sorted
+    def written(dir: String): Seq[String] =
+      spark.read.text(dir).as[String].collect().toSeq.sorted
+    def stamp(df: DataFrame, clock: LocalDateTime) =
+      Ops.stampJobInfo(df, "j", Jobs.runDateTimeFmt.format(clock),
+        Some(("recommendation_", Map.empty[String, String])))
+    val day1 = LocalDateTime.of(2024, 1, 1, 0, 0, 0)
+    val day2 = LocalDateTime.of(2024, 1, 2, 0, 0, 0)
+
+    val root = fixture("jobfields")
+    val cfg = cfgFor(root, fieldLists)
+    val want1 = fieldLists.map { case (c, fs) => c -> reference(root, fs) }
+    val r1 = Jobs.run(spark, Jobs.RelatedItems, root, "j", cfg, day1)
+    changeI2(root)
+    val want2 = fieldLists.map { case (c, fs) => c -> reference(root, fs) }
+    val r2 = Jobs.run(spark, Jobs.RelatedItems, root, "j", cfg, day2)
+    for ((c, _) <- fieldLists) {
+      val out1 = r1.connectors.find(_.connector == c).get
+      val out2 = r2.connectors.find(_.connector == c).get
+      assert(written(out1.outputDir) == lines(stamp(want1(c), day1)), c)
+      val delta = Ops.deltaCheck(want2(c), want1(c))
+      assert(written(out2.outputDir) == lines(stamp(delta, day2)), c)
+      assert(out2.rowsWritten == 1, c) // only (i2, u1) changed
+      assert(written(s"$root/output/$c/state") == lines(want2(c)), c)
+    }
+    assert(written(s"$root/output/a/state").head.contains(
+      """"recommendations":[{"itemId":"p1","brand":"B1"}"""))
+    assert(written(s"$root/output/b/state").head.contains(
+      """"recommendations":[{"itemId":"p1","price":"9.99","brand":"B1"}"""))
+
+    // A second decorate+assemble subtree per field list would add Spark
+    // jobs (its own broadcast and grouping): the mixed-list job must start
+    // exactly as many as one whose connectors all ask for the same list.
+    def jobsPerSync(lists: Map[String, Seq[String]], tag: String) = {
+      val root = fixture(tag)
+      val cfg = cfgFor(root, lists)
+      val first = jobsDuring(
+        Jobs.run(spark, Jobs.RelatedItems, root, "j", cfg, day1))
+      changeI2(root)
+      (first, jobsDuring(
+        Jobs.run(spark, Jobs.RelatedItems, root, "j", cfg, day2)))
+    }
+    val mixed = jobsPerSync(fieldLists, "jobfieldsmixed")
+    val uniform = jobsPerSync(fieldLists.map(_._1 -> Seq.empty[String]),
+      "jobfieldsuniform")
+    assert(mixed == uniform,
+      s"jobs per sync with three field lists $mixed vs one list $uniform")
   }
 
   test("errors gate adds no input scan on a clean (zero-errors) run") {
@@ -295,6 +429,23 @@ class JobsSpec extends SparkSpec {
       s"$root/errors/related_items/year=2024/month=01/day=02/time=030405"
     assert(spark.read.json(errDir).count() == 1,
       "first-connector failure lost the error records")
+  }
+
+  test("errors survive a metadata field the metadata does not have") {
+    // The shared decorate fails analysis before any connector writes.
+    val root = tmpDir("joberrfield")
+    writeFixtures(root)
+    val cfg = JobConfig.parse(
+      s"""{"batchInferencePath": "$root/input/batch",
+         |"connectors": {"a": {"itemMetadataFields": ["color"]}}}"""
+        .stripMargin)
+    intercept[Exception] {
+      Jobs.run(spark, Jobs.RelatedItems, root, "j", cfg,
+        LocalDateTime.of(2024, 1, 2, 3, 4, 5))
+    }
+    val errDir =
+      s"$root/errors/related_items/year=2024/month=01/day=02/time=030405"
+    assert(spark.read.json(errDir).count() == 1)
   }
 
   test("user-personalization spec: no mapping, keyed by queryUserId") {

@@ -1,7 +1,11 @@
 package graft
 
-import org.apache.spark.sql.Row
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.Except
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.etl.Ops
 import graft.io.Readers
@@ -113,6 +117,75 @@ class OpsSpec extends SparkSpec {
     // (1,a) suppressed (in state), dup collapsed; (2,b) changed; (3,c) new
     assert(out.map(r => (r.getInt(0), r.getString(1))).toSeq ==
       Seq((2, "b"), (3, "c")))
+  }
+
+  /** deltaCheck must return exactly the rows and sorted columns of the
+    * plain canonicalized EXCEPT it reorders internally.
+    */
+  private def assertPlainExcept(cur: DataFrame, state: DataFrame): Unit = {
+    val got = Ops.deltaCheck(cur, state)
+    val want = Ops.canonicalizeColumns(cur)
+      .except(Ops.canonicalizeColumns(state))
+    assert(got.columns.toSeq == cur.columns.sorted.toSeq)
+    assert(got.schema == want.schema)
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(got) == rows(want))
+  }
+
+  test("deltaCheck equals the plain EXCEPT on nested rows (differential)") {
+    val recs = ArrayType(StructType(Seq(StructField("itemId", StringType),
+      StructField("price", DoubleType))))
+    // columns deliberately out of order; the array sorts between the keys
+    val schema = StructType(Seq(StructField("userId", StringType),
+      StructField("recommendations", recs), StructField("queryItemId",
+        StringType)))
+    def frame(rows: (String, Seq[(String, Double)], String)*) =
+      spark.createDataFrame(rows.map { case (u, rs, q) =>
+        Row(u, Option(rs).map(_.map { case (i, p) => Row(i, p) }).orNull, q)
+      }.asJava, schema)
+    val cur = frame(
+      ("u1", Seq("p1" -> 1.0, "p2" -> -0.0), "i1"), // == state's 0.0
+      ("u2", Seq("p1" -> Double.NaN), "i1"), // NaN == NaN
+      ("u3", Seq("p1" -> 2.0), "i1"), // changed payload
+      ("u4", Seq("p1" -> 1.0), null), // null key, in state
+      (null, Seq("p1" -> 1.0), "i2"), // null key, new
+      ("u5", null, "i2"), // null array, in state
+      ("u6", Seq("p1" -> 5.0), "i3"), ("u6", Seq("p1" -> 5.0), "i3"), // dup
+      ("u7", Seq("p1" -> 2.0), "i4"), // one of two state payloads
+      ("u7", Seq("p1" -> 3.0), "i4"), // neither state payload
+      ("u8", Seq.empty, "i5"))
+    val state = frame(
+      ("u1", Seq("p1" -> 1.0, "p2" -> 0.0), "i1"),
+      ("u1", Seq("p1" -> 1.0, "p2" -> 0.0), "i1"), // dup
+      ("u2", Seq("p1" -> Double.NaN), "i1"),
+      ("u3", Seq("p1" -> 3.0), "i1"),
+      ("u4", Seq("p1" -> 1.0), null),
+      ("u5", null, "i2"),
+      ("u7", Seq("p1" -> 1.0), "i4"), ("u7", Seq("p1" -> 2.0), "i4"))
+    assertPlainExcept(cur, state)
+    val kept = Ops.deltaCheck(cur, state)
+      .select("queryItemId", "userId").collect()
+      .map(r => s"${r.getString(0)}/${r.getString(1)}").sorted.toSeq
+    assert(kept == Seq("i1/u3", "i2/null", "i3/u6", "i4/u7", "i5/u8"))
+  }
+
+  test("deltaCheck equals the plain EXCEPT on an all-atomic frame") {
+    val cur = Seq((Some(1), "a", 1.5), (Some(1), "a", 1.5), (None, "b", 0.0),
+      (Some(2), null, 4.0), (Some(3), "c", Double.NaN))
+      .toDF("k", "v", "w")
+    val state = Seq((Some(1), "a", 1.5), (None, "b", -0.0),
+      (Some(2), null, 1.0), (Some(3), "c", Double.NaN), (Some(3), "c", 2.0))
+      .toDF("k", "v", "w")
+    assertPlainExcept(cur, state)
+    assert(Ops.deltaCheck(cur, state).collect().toSeq == Seq(Row(2, null, 4.0)))
+  }
+
+  test("deltaCheck runs its EXCEPT over atomic columns first") {
+    val cur = Seq(("i1", Seq("p1"), "u1")).toDF("queryItemId",
+      "recommendations", "userId")
+    val except = Ops.deltaCheck(cur, cur).queryExecution.analyzed
+      .collectFirst { case e: Except => e.left.output.map(_.name) }
+    assert(except.contains(Seq("queryItemId", "userId", "recommendations")))
   }
 
   test("deltaCheckKeyed matches deltaCheck when keys are unique") {
